@@ -940,7 +940,7 @@ ABS_TIME_NOTES = {
         "rows-only (no oracle): shingle -> 64-perm minhash signature -> "
         "banded bucket self-join + candidate-only Jaccard verify, with "
         "the shingle/signature frames persisted for the two band "
-        "consumers (operators/dedup.py _REUSE); never all-pairs, recall "
+        "consumers (operators/dedup.py _banded_pairs); never all-pairs, recall "
         "1.0 pinned in BOUNDS.json, 1.2x@10x in SCALING.md — the cost "
         "is the signature build, linear in corpus bytes"
     ),

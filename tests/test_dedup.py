@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ub_etl_spark.operators.dedup import (
     build_dim,
+    containment_banded_pairs,
     dedup_exact,
     dedup_keyed_latest,
     exact_jaccard_pairs,
@@ -94,6 +96,11 @@ def test_minhash_lsh_recall_vs_exact(spark):
     assert recall >= 0.9, f"LSH recall too low: {recall} ({lsh=} vs {exact=})"
     # no false positives by construction (candidates are exact-verified)
     assert lsh <= exact
+    # a band count that does not divide num_perm would drop signature
+    # columns silently: both banded operators refuse it
+    for banded in (minhash_lsh_pairs, containment_banded_pairs):
+        with pytest.raises(ValueError, match="divisible"):
+            banded(docs, "doc_id", "text", num_perm=16, bands=5)
 
 
 def test_minhash_lsh_recall_on_corpus(spark, sf_dir):

@@ -61,6 +61,27 @@ def test_upsert_within_batch_recency(spark):
     assert rows_set(out) == {(1, 10, 0.8, 2)}
 
 
+def test_upsert_strict_newer_over_two_order_columns(spark):
+    """order_by=["a", "b"] is a lexicographic recency order: the incoming
+    row wins only when (a, b) is strictly newer than the stored one; on a
+    tie the stored row stays.  One key per (stored, incoming) pair drawn
+    from {1,2}^2 x {1,2}^2."""
+    gens = [(a, b) for a in (1, 2) for b in (1, 2)]
+    pairs = [(s, u) for s in gens for u in gens]
+    schema = "k int, a int, b int, src string"
+    existing = spark.createDataFrame(
+        [(k, sa, sb, "stored") for k, ((sa, sb), _) in enumerate(pairs)], schema
+    )
+    updates = spark.createDataFrame(
+        [(k, ua, ub, "incoming") for k, (_, (ua, ub)) in enumerate(pairs)], schema
+    )
+    out = upsert_latest_wins(existing, updates, ["k"], order_by=["a", "b"])
+    got = {r.k: r.src for r in out.collect()}
+    assert got == {
+        k: "incoming" if u > s else "stored" for k, (s, u) in enumerate(pairs)
+    }
+
+
 def test_upsert_preserves_untouched_keys_at_scale(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     updates = orders.filter(F.col("o_orderkey") % 100 == 0).withColumn(

@@ -77,60 +77,6 @@ def test_merge_idempotent(spark, table_dir):
     assert got == {(1, 11.0)}
 
 
-def test_merge_dispatch_falls_back_without_delta(spark, table_dir):
-    """merge_into_table must select the bucketed-parquet path in this
-    environment (no delta jar) and produce the same latest-wins result."""
-    from ub_etl_spark.operators.storage import have_delta, merge_into_table
-
-    assert not have_delta(), "sandbox is expected to lack delta-spark"
-    base = spark.createDataFrame([(1, 10, "a"), (2, 10, "b")], "id long, v long, s string")
-    write_bucketed(base, table_dir, ["id"], n_buckets=4)
-    upd = spark.createDataFrame([(2, 20, "b2"), (3, 5, "c")], "id long, v long, s string")
-    path_taken = merge_into_table(spark, table_dir, upd, ["id"], order_by=["v"], n_buckets=4)
-    assert path_taken == "bucketed_parquet"
-    got = {(r.id, r.v, r.s) for r in read_table(spark, table_dir).collect()}
-    assert got == {(1, 10, "a"), (2, 20, "b2"), (3, 5, "c")}
-
-
-def test_merge_dispatch_delta_requested_without_jar(spark, table_dir):
-    """Forcing the delta path without the jar must fail loudly (ImportError),
-    never silently fall back — the caller asked for transactional semantics."""
-    from ub_etl_spark.operators.storage import merge_into_table
-
-    base = spark.createDataFrame([(1, 10)], "id long, v long")
-    write_bucketed(base, table_dir, ["id"], n_buckets=2)
-    upd = spark.createDataFrame([(1, 20)], "id long, v long")
-    with pytest.raises(ImportError):
-        merge_into_table(spark, table_dir, upd, ["id"], order_by=["v"], use_delta=True)
-
-
-def test_lexicographic_newer_condition():
-    from ub_etl_spark.operators.storage import lexicographic_newer
-
-    assert lexicographic_newer("u", "t", ["ts"]) == "(u.ts > t.ts)"
-    got = lexicographic_newer("u", "t", ["ts", "seq"])
-    assert got == "(u.ts > t.ts) OR (u.ts = t.ts AND u.seq > t.seq)"
-
-
-def test_lexicographic_newer_agrees_with_window_ordering(spark):
-    """The Delta-side MERGE condition and the parquet-side window ordering
-    must pick the same winner for every ordered pair."""
-    from ub_etl_spark.operators.storage import lexicographic_newer
-
-    rows = [(a, b) for a in (1, 2) for b in (1, 2)]
-    df = spark.createDataFrame(
-        [(i, ua, ub, j, ta, tb)
-         for i, (ua, ub) in enumerate(rows)
-         for j, (ta, tb) in enumerate(rows)],
-        "i int, u_a int, u_b int, j int, t_a int, t_b int",
-    )
-    cond = lexicographic_newer("u", "t", ["a", "b"]).replace("u.", "u_").replace("t.", "t_")
-    got = {(r.i, r.j): r.newer for r in df.selectExpr("i", "j", f"({cond}) AS newer").collect()}
-    for i, (ua, ub) in enumerate(rows):
-        for j, (ta, tb) in enumerate(rows):
-            assert got[(i, j)] == ((ua, ub) > (ta, tb)), (i, j)
-
-
 # ---------------------------------------------------------------------------
 # Z-order clustering + small-file compaction (SURVEY.md B36/B37)
 # ---------------------------------------------------------------------------
@@ -206,79 +152,6 @@ def test_compact_collapses_file_count_and_preserves_rows(spark, table_dir, sf_di
     ranges = sorted((r.lo, r.hi) for r in per_file)
     for (_, prev_hi), (lo, _) in zip(ranges, ranges[1:]):
         assert lo >= prev_hi
-
-
-def test_merge_dispatch_delta_path_with_mocked_module(spark, table_dir):
-    """Covers the delta dispatch arm without the jar (VERDICT r2 ask #6):
-    a mocked delta.tables.DeltaTable records the merge call chain, proving
-    merge_into_table(use_delta=True) builds the null-safe key condition,
-    pre-dedupes the batch latest-wins, guards the update with the
-    lexicographic-newer condition, and runs insert+execute."""
-    import sys
-    import types
-
-    from ub_etl_spark.operators.storage import have_delta, merge_into_table
-
-    calls: list = []
-    captured: dict = {}
-
-    class FakeMergeBuilder:
-        def whenMatchedUpdateAll(self, condition=None):
-            calls.append(("whenMatchedUpdateAll", condition))
-            return self
-
-        def whenNotMatchedInsertAll(self):
-            calls.append(("whenNotMatchedInsertAll", None))
-            return self
-
-        def execute(self):
-            calls.append(("execute", None))
-
-    class FakeDeltaTable:
-        @classmethod
-        def forPath(cls, _spark, path):
-            captured["path"] = path
-            return cls()
-
-        def alias(self, _a):
-            return self
-
-        def merge(self, batch, cond):
-            captured["batch"] = batch
-            captured["cond"] = cond
-            return FakeMergeBuilder()
-
-    delta_mod = types.ModuleType("delta")
-    tables_mod = types.ModuleType("delta.tables")
-    tables_mod.DeltaTable = FakeDeltaTable
-    delta_mod.tables = tables_mod
-    saved = {k: sys.modules.get(k) for k in ("delta", "delta.tables")}
-    sys.modules["delta"] = delta_mod
-    sys.modules["delta.tables"] = tables_mod
-    try:
-        assert have_delta(), "mock must make detection succeed"
-        # duplicate key 1 in the batch: latest-wins dedup must keep v=30
-        upd = spark.createDataFrame(
-            [(1, 20, "x"), (1, 30, "y"), (2, 5, "z")], "id long, v long, s string"
-        )
-        # auto-detection now sees the mock -> delta path chosen
-        path_taken = merge_into_table(spark, table_dir, upd, ["id"], order_by=["v"])
-        assert path_taken == "delta"
-        assert captured["path"] == table_dir
-        assert captured["cond"] == "t.id <=> u.id"
-        batch_rows = {(r.id, r.v) for r in captured["batch"].collect()}
-        assert batch_rows == {(1, 30), (2, 5)}, "batch must be deduped latest-wins"
-        assert calls == [
-            ("whenMatchedUpdateAll", "(u.v > t.v)"),
-            ("whenNotMatchedInsertAll", None),
-            ("execute", None),
-        ]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                sys.modules.pop(k, None)
-            else:
-                sys.modules[k] = v
 
 
 # ---------------------------------------------------------------------------

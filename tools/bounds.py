@@ -767,9 +767,8 @@ def main() -> None:
     ok = True
     for name, fn in MEASURES.items():
         res = fn(spark, args.sf)
-        # free tracked frames AND the raw .persist(_REUSE) caches the
-        # dedup/LSH operators hold — measurements must not run under a
-        # previous measure's resident cache
+        # free tracked frames AND any caches a measure holds — measurements
+        # must not run under a previous measure's resident cache
         release_persisted()
         spark.catalog.clearCache()
         out["bounds"][name] = res

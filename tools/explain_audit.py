@@ -48,7 +48,7 @@ EXPECT = {
     "text_fingerprint": ["codegen id :"],  # single shuffle-free projection
     # partition-pruned read: the IN predicate must land in PartitionFilters
     "storage_partitioned_write": ["PartitionFilters: [", "event_type#"],
-    # the shingle+signature subplan is persisted (operators/dedup.py _REUSE):
+    # the shingle+signature subplan is persisted (operators/dedup.py _banded_pairs):
     # every consumer after the first must read the in-memory relation, not
     # re-scan parquet
     "dedup_minhash_lsh": ["InMemoryTableScan", "HashAggregate"],
@@ -557,7 +557,7 @@ Per-offender notes (worst ratios in BENCH_r02):
 - **dedup_minhash_lsh** (1.33 s -> ~0.5 s steady): ReuseExchange was NOT
   firing (mirrored self-join branches canonicalize differently; 8 parquet
   scans per run).  Fixed by persisting the shingle + signature + bucket
-  frames (operators/dedup.py _REUSE); the audit below requires
+  frames (operators/dedup.py _banded_pairs); the audit below requires
   InMemoryTableScan in the final plan.
 - **events_funnel** (~1.0 s vs 39 ms): three chained agg->broadcast-join
   stages = 3x the AQE stage floor; each stage's data is tiny (150 users).

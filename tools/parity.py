@@ -102,8 +102,8 @@ def main() -> int:
         status = "PASS" if ok else "FAIL"
         print(f"[{status}] {name:28s} {dt:6.2f}s  {msg}", flush=True)
         failures += 0 if ok else 1
-        # LSH-family queries persist reuse frames (operators/dedup.py
-        # _REUSE); drop them so a 95-query session doesn't accumulate
+        # LSH-family queries persist reuse frames (tracked_persist in
+        # operators/dedup.py); drop them so a 95-query session doesn't accumulate
         # cached relations across unrelated queries
         release_persisted()
         spark.catalog.clearCache()

@@ -48,15 +48,6 @@ def dmul(a: Column | str, b: Column | str) -> Column:
     return to_dec(a) * to_dec(b)
 
 
-def sql_dsum(expr: str, alias: str, typ: str = DEC) -> str:
-    """DuckDB-side rendering of dsum for oracle strings."""
-    return f"CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE) AS {alias}"
-
-
-def sql_davg(expr: str, alias: str, typ: str = DEC) -> str:
-    return f"CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE) / COUNT({expr}) AS {alias}"
-
-
 # ---------------------------------------------------------------------------
 # Fast path: fixed-point "cents" arithmetic on LONG.
 #

@@ -18,19 +18,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-# Frames consumed by several branches of one plan (the shingle set feeds the
-# signature aggregate AND both sides of the verify join) are persisted
-# explicitly: Catalyst's ReuseExchange only kicks in when two exchange
-# subplans canonicalize identically, which the mirrored self-join branches
-# here defeat — measured: 8 parquet scans per LSH query without the persist,
-# 2 with it.  MEMORY_AND_DISK so the 100 TB path spills instead of OOMing;
-# re-running the same query hits Spark's CacheManager by canonicalized-plan
-# equality, so repeated calls don't stack copies.
-_REUSE = StorageLevel.MEMORY_AND_DISK
+from ub_etl_spark.session import tracked_persist
 
 
 def dedup_exact(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
@@ -73,23 +64,6 @@ def resolve_fk(facts: DataFrame, dim: DataFrame, natural_key: Sequence[str]) -> 
 # Shingling + fuzzy dedup
 # ---------------------------------------------------------------------------
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of a text column, as array<string>.
-
-    NOTE: built on transform(), a higher-order function, which Spark
-    evaluates *interpreted* (no whole-stage codegen).  Fine for small
-    arrays / tests; the corpus-scale path is shingle_rows() below, which
-    stays fully codegen'd.
-    """
-    toks = F.split(text, " ")
-    # guard: texts shorter than n tokens get a single shingle of the whole text
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(F.array(text))
-
-
 def shingle_rows(
     docs: DataFrame,
     id_col: str,
@@ -107,13 +81,12 @@ def shingle_rows(
     interpretation, no window, no shuffle.  ~10x faster than the
     transform() formulation on the documents corpus.
 
-    Short texts (< n tokens) contribute the whole text as one shingle,
-    matching word_shingles() — UNLESS short_docs=False, the containment
-    family's convention (their oracle's empty generate_series drops
-    sub-n docs entirely; r12 makes this helper the single source of the
-    gram subplan for BOTH containment forms so the banded twin's
-    bit-equal-score guarantee cannot drift from the exact form's
-    tokenization).
+    Short texts (< n tokens) contribute the whole text as one shingle —
+    UNLESS short_docs=False, the containment family's convention (their
+    oracle's empty generate_series drops sub-n docs entirely; this helper
+    is the single source of the gram subplan for BOTH containment forms
+    so the banded twin's bit-equal-score guarantee cannot drift from the
+    exact form's tokenization).
 
     distinct=False skips the (doc_id, shingle) dedup shuffle — for
     consumers whose downstream aggregate is duplicate-insensitive (min)
@@ -164,7 +137,7 @@ def exact_jaccard_pairs(
     # NOT persisted, deliberately: the shingle subplan here is a cheap fully
     # parallel codegen'd scan+explode; measured, re-computing it 3x (0.5 s
     # steady at sf0.1) beats funneling every consumer through the coalesced
-    # in-memory relation (1.2 s).  minhash_lsh_pairs persists because its
+    # in-memory relation (1.2 s).  _banded_pairs persists because its
     # reused subplan carries an expensive 17-aggregate groupBy.
     sh = shingle_rows(docs, id_col, text_col, n)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -189,19 +162,86 @@ def exact_jaccard_pairs(
     return out.select("id_a", "id_b", "n_a", "n_b", "n_common", "jaccard")
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str, text_col: str, n: int = 3, num_perm: int = 16
-) -> DataFrame:
-    """MinHash signature per doc: num_perm seeded xxhash64 minima.
+def _banded_pairs(grams: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """Banded MinHash candidate generation + exact set-overlap verify —
+    the one skeleton behind minhash_lsh_pairs and containment_banded_pairs.
 
-    One explode + one groupBy with num_perm min() aggregates — a single
-    shuffle on doc_id, all JVM-side.  Output: (doc_id, h0..h{num_perm-1}).
+    ``grams``: (doc_id, shingle) rows, duplicates allowed.  One aggregate
+    per doc produces the num_perm seeded xxhash64 minima AND the doc's
+    hashed-shingle set (collect_set deduplicates inside the agg, so the
+    exploded shingle stream is consumed by exactly one shuffle — no
+    pre-dedup exchange, no second pass over shingle rows).  The minima
+    split into ``bands`` bands of num_perm/bands rows; a pair becomes a
+    candidate if any band's rows all match — the classic S-curve, bucket
+    sizes capped by it, so the self-join never goes all-pairs.
+    Verification is array_intersect on the two compact per-doc sets
+    joined to the candidates — cost per candidate is |set_a| + |set_b|,
+    and the plan has no post-band-join re-aggregation.
+
+    Intersecting 64-bit shingle hashes instead of strings can over-count
+    n_common only on an intra-pair hash collision (P ~ |set|^2 / 2^64 —
+    ~5e-12 for 10k-shingle docs).  Memory note: per-doc sets ride through
+    doc_id-keyed exchanges only (never the banded explosion); for
+    pathological documents (>~100k shingles) switch the verify step back
+    to an exploded (doc_id, shingle) join.
+
+    Output: (id_a, id_b, n_common, n_a, n_b) with id_a < id_b; callers
+    score and filter.
     """
-    sh = shingle_rows(docs, id_col, text_col, n)
+    if num_perm % bands:
+        raise ValueError(
+            f"num_perm ({num_perm}) must be divisible by bands ({bands}): "
+            "a remainder would silently truncate the signature"
+        )
+    rows_per = num_perm // bands
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}") for i in range(num_perm)
+    ] + [F.collect_set(F.xxhash64(F.col("shingle"))).alias("shs")]
+    # Frames consumed by several branches of one plan are persisted
+    # explicitly: Catalyst's ReuseExchange only kicks in when two exchange
+    # subplans canonicalize identically, which the mirrored self-join
+    # branches here defeat — measured: 8 parquet scans per LSH query
+    # without the persist, 2 with it.  tracked_persist, so
+    # release_persisted() frees them between measurements.
+    sig = tracked_persist(  # consumed by the band explode and both verify joins
+        grams.groupBy("doc_id").agg(*aggs).withColumn("n_sh", F.size("shs"))
+    )
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(*[F.col(f"h{b * rows_per + r}") for r in range(rows_per)]).alias("bh"),
+        )
+        for b in range(bands)
     ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    buckets = tracked_persist(  # consumed by both sides of the band self-join
+        sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
+        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+    )
+    a = buckets.alias("a")
+    b = buckets.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bh") == F.col("b.bh"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    sa = sig.select(F.col("doc_id").alias("id_a"), F.col("shs").alias("sa"), F.col("n_sh").alias("n_a"))
+    sb = sig.select(F.col("doc_id").alias("id_b"), F.col("shs").alias("sb"), F.col("n_sh").alias("n_b"))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("sa", "sb")).alias("n_common"),
+            "n_a",
+            "n_b",
+        )
+    )
 
 
 def minhash_lsh_pairs(
@@ -215,78 +255,21 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation, then exact-Jaccard verify.
 
-    bands * rows_per_band == num_perm; a pair collides if any band's rows all
-    match — the classic S-curve.  Candidates are verified with exact n-gram
-    Jaccard so the output has no false positives (recall is probabilistic).
-
-    One aggregate per doc produces the num_perm minima AND the doc's
-    hashed-shingle set (collect_set deduplicates inside the agg, so the
-    exploded shingle stream is consumed by exactly one shuffle — no
-    pre-dedup exchange, no second pass over shingle rows).  Verification
-    is then array_intersect on the two compact per-doc sets joined to the
-    candidate pairs — cost per candidate is |set_a| + |set_b|, never
-    all-pairs, and the plan has no post-band-join re-aggregation.
-    Intersecting 64-bit shingle hashes instead of strings can over-count
-    n_common only on an intra-pair hash collision (P ~ |set|^2 / 2^64 —
-    ~5e-12 for 10k-shingle docs).  Memory note: per-doc sets ride through
-    doc_id-keyed exchanges only (never the banded explosion); for
-    pathological documents (>~100k shingles) switch the verify step back
-    to an exploded (doc_id, shingle) join.  Output: (id_a, id_b, jaccard).
+    bands * rows_per_band == num_perm (ValueError otherwise); candidates
+    and their shingle-set overlap come from _banded_pairs, so the output
+    has no false positives (recall is probabilistic).
+    Output: (id_a, id_b, jaccard).
     """
-    rows_per = num_perm // bands
-    sh = shingle_rows(docs, id_col, text_col, n, distinct=False)
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}") for i in range(num_perm)
-    ] + [F.collect_set(F.xxhash64(F.col("shingle"))).alias("shs")]
-    sig = (
-        sh.groupBy("doc_id")
-        .agg(*aggs)
-        .withColumn("n_sh", F.size("shs"))
-        .persist(_REUSE)  # consumed by the band explode and both verify joins
+    pairs = _banded_pairs(
+        shingle_rows(docs, id_col, text_col, n, distinct=False), num_perm, bands
     )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[F.col(f"h{b * rows_per + r}") for r in range(rows_per)]).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    buckets = (
-        sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-        .persist(_REUSE)  # consumed by both sides of the band self-join
+    common = F.col("n_common")
+    verified = pairs.select(
+        "id_a", "id_b", (common / (F.col("n_a") + F.col("n_b") - common)).alias("jaccard")
     )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sig.select(F.col("doc_id").alias("id_a"), F.col("shs").alias("sa"), F.col("n_sh").alias("n_a"))
-    sb = sig.select(F.col("doc_id").alias("id_b"), F.col("shs").alias("sb"), F.col("n_sh").alias("n_b"))
-    common = F.size(F.array_intersect("sa", "sb"))
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (common / (F.col("n_a") + F.col("n_b") - common)).alias("jaccard"),
-        )
-    )
-    # jaccard > 0 preserves the pre-rewrite invariant that zero-overlap
-    # band collisions never reach the output (the old inner shingle-join
-    # dropped them structurally), even when a caller passes threshold <= 0
-    # to mean "all verified candidates with scores"
+    # jaccard > 0: zero-overlap band collisions never reach the output,
+    # even when a caller passes threshold <= 0 to mean "all verified
+    # candidates with scores"
     return verified.filter((F.col("jaccard") >= threshold) & (F.col("jaccard") > 0))
 
 
@@ -302,16 +285,14 @@ def containment_banded_pairs(
     """Banded candidate generation + exact containment verify — the
     corpus-scale twin of the exact gram-join containment dedup
     (queries/behavior.text_containment_dedup names this as its scale
-    lever; r11 verdict task 2 commissions it).
+    lever).
 
-    Same skeleton as minhash_lsh_pairs — ONE aggregate per doc yields
-    the num_perm seeded minima AND the doc's hashed-gram set, band
-    explode, co-bucket self-join, verify on the compact per-doc sets —
-    but the verified score is CONTAINMENT |A ∩ B| / min(|A|, |B|), and
-    the gram semantics exactly match the exact form: lower(text),
-    n-token shingles, docs under n tokens contribute NOTHING (no
-    whole-text fallback — shingle_rows' short-doc row would diverge
-    from the registered exact form's plan, whose oracle drops them).
+    Same skeleton as minhash_lsh_pairs (_banded_pairs), but the verified
+    score is CONTAINMENT |A ∩ B| / min(|A|, |B|), and the gram semantics
+    exactly match the exact form: lower(text), n-token shingles, docs
+    under n tokens contribute NOTHING (no whole-text fallback —
+    shingle_rows' short-doc row would diverge from the registered exact
+    form's plan, whose oracle drops them).
 
     Why this scales where the exact form stops: the exact gram join
     materializes a row per co-occurring (gram, doc-pair) — linear in
@@ -319,8 +300,7 @@ def containment_banded_pairs(
     hottest gram's doc-frequency.  Here the full-corpus work is one
     groupBy(doc_id) aggregate (a single exchange keyed by doc, skew-free)
     plus a band join whose bucket sizes are capped by the S-curve, and
-    verification touches CANDIDATES only, each at |set_a| + |set_b|
-    cost via array_intersect.
+    verification touches CANDIDATES only.
 
     Recall is probabilistic and containment-skewed: a band collides
     with P = jaccard^(num_perm/bands), and a containment-c pair with
@@ -331,90 +311,34 @@ def containment_banded_pairs(
     limitation.  The corpus's true pairs are near-identical twins
     (min observed pair-jaccard 0.89 at sf0.01), where recall is ~1.0;
     measured recall vs the exact form is pinned in BOUNDS.json and
-    tests/test_behavior.py.  Precision is 1.0 by construction (every
-    candidate is verified with exact set intersection; hashed-gram
-    intersection can over-count only on an intra-pair 64-bit collision,
-    P ~ |set|^2 / 2^64).  COLLISION-BUDGET ASYMMETRY vs the exact twin —
-    documented deliberately (r12 ADVICE, adjudicated r13 with data): the
-    exact form verifies on a 2x64-bit composite gram key (2^-128); this
-    form keeps a single 64-bit element because the verify sets ride the
-    doc-keyed exchange and array_intersect's primitive-long fast path —
-    the composite-struct variant was BUILT and MEASURED r13
-    (same-session interleaved min-of-3: 1.218s vs 1.309s at 1x, 1.420s
-    vs 2.131s at 10x — struct elements leave primitive specialization
-    and double set bytes, +50% where the corpus term dominates) and
-    rejected.  At the banded form's charter (candidate generation whose
-    output is re-checkable against the exact twin) the 2^-64 budget
-    means ~1e-6 expected spurious score inflations per 1e9 candidate
-    pairs — negligible against the banding's own probabilistic recall,
-    which is the operator's stated error model.
+    tests/test_behavior.py.  Precision is 1.0 by construction.
+    COLLISION-BUDGET ASYMMETRY vs the exact twin, documented
+    deliberately: the exact form verifies on a 2x64-bit composite gram
+    key (2^-128); this form keeps a single 64-bit element because the
+    verify sets ride the doc-keyed exchange and array_intersect's
+    primitive-long fast path — the composite-struct variant was built
+    and measured (same-session interleaved min-of-3: 1.218s vs 1.309s
+    at 1x, 1.420s vs 2.131s at 10x — struct elements leave primitive
+    specialization and double set bytes) and rejected.  At the banded
+    form's charter (candidate generation whose output is re-checkable
+    against the exact twin) the 2^-64 budget means ~1e-6 expected
+    spurious score inflations per 1e9 candidate pairs — negligible
+    against the banding's own probabilistic recall.
 
     Output: (id_a, id_b, containment) with id_a < id_b, the exact
     form's schema."""
-    if num_perm % bands:
-        raise ValueError(
-            f"num_perm ({num_perm}) must be divisible by bands ({bands}): "
-            "a remainder would silently truncate the signature"
-        )
-    rows_per = num_perm // bands
     # the SHARED gram subplan (shingle_rows with the containment
     # family's conventions: lowercase fold, sub-n docs contribute
     # nothing) — single source with the exact form, so tokenization
     # cannot drift between the twins
     grams = shingle_rows(
         docs, id_col, text_col, n=n, distinct=False, lower=True, short_docs=False
-    ).withColumnRenamed("shingle", "gram")
-    from ub_etl_spark.session import tracked_persist
-
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("gram"))).alias(f"h{i}")
-        for i in range(num_perm)
-    ] + [F.collect_set(F.xxhash64(F.col("gram"))).alias("gs")]
-    # tracked_persist (not raw .persist) so release_persisted() frees the
-    # widest frame in this plan between harness measurements — consumed
-    # by the band explode and both verify joins
-    sig = tracked_persist(
-        grams.groupBy("doc_id").agg(*aggs).withColumn("n_grams", F.size("gs"))
     )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col(f"h{b * rows_per + r}") for r in range(rows_per)]
-            ).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    buckets = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("id_a"), F.col("gs").alias("sa"), F.col("n_grams").alias("na")
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("id_b"), F.col("gs").alias("sb"), F.col("n_grams").alias("nb")
-    )
-    common = F.size(F.array_intersect("sa", "sb"))
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (common.cast("double") / F.least("na", "nb")).alias("containment"),
-        )
+    pairs = _banded_pairs(grams, num_perm, bands)
+    verified = pairs.select(
+        "id_a",
+        "id_b",
+        (F.col("n_common").cast("double") / F.least("n_a", "n_b")).alias("containment"),
     )
     return verified.filter(
         (F.col("containment") >= threshold) & (F.col("containment") > 0)
@@ -582,7 +506,7 @@ def hamming_pairs(
             )
         ).alias("ck"),
     ).select("doc_id", "sh", F.col("ck.chunk").alias("chunk"), F.col("ck.cv").alias("cv"))
-    chunks = chunks.persist(_REUSE)  # both sides of the chunk self-join
+    chunks = tracked_persist(chunks)  # both sides of the chunk self-join
     a = chunks.alias("a")
     b = chunks.alias("b")
     return (
@@ -775,7 +699,6 @@ def substring_spans(
     (no full window exists), matching the oracle's empty range().
     """
     from ub_etl_spark.operators.intervals import coalesce_token_spans
-    from ub_etl_spark.session import tracked_persist
 
     # r15 MEASURED NON-CHANGE: a round-robin repartition of the tokenized
     # docs (to spread the k-gram hash pass beyond the single-row-group

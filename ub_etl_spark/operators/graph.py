@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ub_etl_spark.session import tracked_persist
+
 
 def canonical_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """Distinct undirected edges as (u, v) with u < v, self-loops dropped."""
@@ -103,9 +105,9 @@ def count_triangles(edges: DataFrame, broadcast_adjacency: bool = True) -> DataF
     # so WITHOUT these persists the (possibly expensive) edge-build
     # lineage re-executes once per consumer — measured 2x on the
     # co-purchase graph.  Left cached for this plan's execution (the
-    # hierarchy_flatten_paths convention); bench/test sessions clear
-    # caches between passes.
-    edges = edges.persist()
+    # hierarchy_flatten_paths convention) and tracked, so
+    # release_persisted() frees all four once the caller has its rows.
+    edges = tracked_persist(edges)
     # r16 (guide §2.4 remove redundant work): deg feeds THREE consumers —
     # the du broadcast build, the dv broadcast build, and the stats agg —
     # and each broadcast build is its own job re-running the degree
@@ -118,7 +120,7 @@ def count_triangles(edges: DataFrame, broadcast_adjacency: bool = True) -> DataF
     # (5.02 -> 5.33 s): there deg has only the two broadcast consumers
     # and the eager materialization barrier costs more than the one
     # saved aggregate — three consumers is the break-even on this box.
-    deg = degrees(edges).persist()
+    deg = tracked_persist(degrees(edges))
     # degree tags broadcast: deg is |nodes|-sized (dim scale here; at
     # web scale drop the hint and let AQE pick the join side)
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
@@ -127,19 +129,19 @@ def count_triangles(edges: DataFrame, broadcast_adjacency: bool = True) -> DataF
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = tagged.select(
+    oriented = tracked_persist(tagged.select(
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).persist()
+    ))
     # r16: adj feeds the a_adj AND b_adj broadcast builds — two jobs that
     # each re-ran the collect_list aggregate from the cached oriented
     # frame (the r15 single-aliased-broadcast restructure fails Spark's
     # ambiguous-self-join analysis; persisting the source frame achieves
     # the same single computation without aliasing).  Part of the
     # 5.24 -> 4.00 s win above.
-    adj = oriented.groupBy("src").agg(
+    adj = tracked_persist(oriented.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
-    ).persist()
+    ))
     a_adj = adj.select(F.col("src").alias("src"), F.col("nbrs").alias("nbrs_a"))
     b_adj = adj.select(F.col("src").alias("dst"), F.col("nbrs").alias("nbrs_b"))
     if broadcast_adjacency:
@@ -184,13 +186,13 @@ def bfs_distances(
     sym = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    visited = seed_nodes.select(
+    visited = tracked_persist(seed_nodes.select(
         F.col("node"), F.lit(0).cast("int").alias("dist")
-    ).persist()
+    ))
     frontier = visited
     levels = [visited]
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt = tracked_persist(
             sym.join(frontier, sym.u == frontier.node)
             .select(F.col("v").alias("node"))
             .distinct()
@@ -201,7 +203,6 @@ def bfs_distances(
                 "left_anti",
             )
             .select("node", F.lit(hop).cast("int").alias("dist"))
-            .persist()
         )
         if nxt.isEmpty():
             nxt.unpersist()
@@ -211,8 +212,8 @@ def bfs_distances(
     # leave per-level caches in place for THIS plan's execution (the
     # returned union references every level; unpersisting here would
     # force each level to recompute its whole ancestry — the
-    # hierarchy_flatten_paths convention).  Bench/test sessions clear
-    # caches between passes.
+    # hierarchy_flatten_paths convention); release_persisted() frees
+    # them once the caller has its rows.
     return _union_all(levels)
 
 

@@ -6,9 +6,9 @@ UPDATE`` (scripts/user_course_activity.py:81-102) — one DB round-trip per
 row.  The Spark-native equivalents are set-oriented:
 
   - insert-if-absent  -> left anti-join + union (one shuffle, no per-row IO)
-  - upsert latest-wins -> union + ranking window, or (scale path) partition-
-    scoped overwrite / Delta MERGE when a transactional table format is on
-    the classpath.
+  - upsert latest-wins -> union + ranking window; the scale path runs it
+    over only the touched buckets of a bucketed table
+    (operators/storage.merge_into_bucketed).
 
 At 100 TB the anti-join/window shuffles hash-partition on the merge key, so
 each task holds one key range; AQE splits skewed keys.  The window dedup is
@@ -90,11 +90,9 @@ def upsert_latest_wins(
 
     With ``order_by`` (recency columns, descending): the NEWEST row wins
     regardless of which side it came from, and on an exact recency tie the
-    existing row is kept — i.e. strict-newer update semantics, matching
-    the Delta MERGE path's lexicographic_newer condition exactly
-    (operators/storage.py), so the two merge_into_table backends agree on
-    every input including stale-batch replays (an older replayed batch can
-    never regress a newer stored row).
+    existing row is kept — i.e. strict-newer update semantics under the
+    lexicographic (o1, o2, ...) order, so a stale-batch replay (an older
+    replayed batch) can never regress a newer stored row.
 
     Deterministic as long as (keys + order_by) is a total order per key group.
     """

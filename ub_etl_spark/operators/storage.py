@@ -14,8 +14,8 @@ wrong at 100 TB.  The production-shaped path implemented here:
   - rewrite cost is O(|touched buckets|) = O(|batch| x table/N), not
     O(|table|); N is chosen so a bucket fits an executor comfortably
 
-A Delta/Iceberg MERGE drops in behind the same interface when the jar is
-on the classpath (not in this environment — import-gated).
+merge_into_bucketed (latest-wins) and insert_ignore_into_bucketed
+(first-writer-wins) are the two merge paths.
 """
 
 from __future__ import annotations
@@ -29,15 +29,6 @@ from pyspark.sql import functions as F
 from ub_etl_spark.operators.merge import upsert_latest_wins
 
 BUCKET_COL = "__bucket"
-
-
-def have_delta() -> bool:
-    try:  # pragma: no cover - environment-dependent
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
@@ -64,14 +55,11 @@ def _with_bucket(df: DataFrame, keys: Sequence[str], n_buckets: int) -> DataFram
 # single-task FILE with nothing bounding it.  maxRecordsPerFile makes the
 # writer roll to a new file past the cap (same task, same directory), so
 # the worst case is bounded file sizes at the cost of extra files only in
-# the buckets that actually overflow.  Env-tunable for deployments whose
-# row width differs; the default (5M rows ~ a few hundred MB of typical
-# fact rows) never fires at bench scale, so the bench layout — exactly
-# one file per touched directory — is unchanged (asserted in
-# tests/test_storage.py).
-MAX_RECORDS_PER_BUCKET_FILE = int(
-    os.environ.get("SPARK_GRAFT_MAX_RECORDS_PER_FILE", 5_000_000)
-)
+# the buckets that actually overflow.  5M rows ~ a few hundred MB of
+# typical fact rows: the cap never fires at bench scale, so the bench
+# layout — exactly one file per touched directory — is unchanged
+# (asserted in tests/test_storage.py).
+MAX_RECORDS_PER_BUCKET_FILE = 5_000_000
 
 
 def write_bucketed(df: DataFrame, path: str, keys: Sequence[str], n_buckets: int = 64) -> None:
@@ -100,76 +88,6 @@ def write_bucketed(df: DataFrame, path: str, keys: Sequence[str], n_buckets: int
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path).drop(BUCKET_COL)
-
-
-def lexicographic_newer(left: str, right: str, order_by: Sequence[str]) -> str:
-    """SQL condition: row ``left`` is strictly newer than ``right`` under
-    the lexicographic (o1, o2, ...) ordering — the MERGE-condition twin of
-    upsert_latest_wins' window ordering.  Pure string builder so the Delta
-    path's condition logic is unit-testable without the delta jar."""
-    clauses = []
-    for i, col in enumerate(order_by):
-        eqs = " AND ".join(f"{left}.{c} = {right}.{c}" for c in order_by[:i])
-        gt = f"{left}.{col} > {right}.{col}"
-        clauses.append(f"({eqs} AND {gt})" if eqs else f"({gt})")
-    return " OR ".join(clauses)
-
-
-def merge_into_table(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[str] | None = None,
-    n_buckets: int = 64,
-    use_delta: bool | None = None,
-) -> str:
-    """Latest-wins MERGE dispatch: a real transactional Delta MERGE when
-    delta-spark is on the classpath, else the bucketed-parquet
-    touched-buckets-only overwrite.  Same interface and semantics either
-    way; returns which path ran ("delta" | "bucketed_parquet").
-
-    ``use_delta`` overrides detection (tests); default probes have_delta().
-    """
-    if use_delta is None:
-        use_delta = have_delta()
-    if use_delta:
-        _merge_into_delta(spark, path, updates, keys, order_by)
-        return "delta"
-    merge_into_bucketed(spark, path, updates, keys, order_by=order_by, n_buckets=n_buckets)
-    return "bucketed_parquet"
-
-
-def _merge_into_delta(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[str] | None = None,
-) -> None:
-    """Delta MERGE with latest-wins semantics (reference upsert contract,
-    scripts/user_course_activity.py:81-102): dedupe the batch per key,
-    update a matched row only when the incoming one is strictly newer,
-    insert unmatched.  File pruning on the join keys is Delta's own
-    data-skipping — the transactional analogue of our bucket pruning."""
-    from delta.tables import DeltaTable  # ImportError here = caller misuse
-
-    from ub_etl_spark.operators.dedup import dedup_keyed_latest
-
-    batch = dedup_keyed_latest(updates, keys, order_by) if order_by else updates
-    cond = " AND ".join(f"t.{k} <=> u.{k}" for k in keys)
-    merge = (
-        DeltaTable.forPath(spark, path)
-        .alias("t")
-        .merge(batch.alias("u"), cond)
-    )
-    if order_by:
-        merge = merge.whenMatchedUpdateAll(
-            condition=lexicographic_newer("u", "t", order_by)
-        )
-    else:
-        merge = merge.whenMatchedUpdateAll()
-    merge.whenNotMatchedInsertAll().execute()
 
 
 def insert_ignore_into_bucketed(
@@ -301,8 +219,8 @@ def compact_table(
     executors (never the driver), and on a transactional format the same
     two plans are exactly Delta/Iceberg OPTIMIZE / rewrite_data_files —
     this is the plain-parquet stand-in with a non-atomic swap (write to
-    temp dir + rename would make it atomic per-directory; Delta's commit
-    makes it transactional — have_delta() gates that upgrade elsewhere)."""
+    temp dir + rename would make it atomic per-directory; a table
+    format's commit would make it transactional)."""
     n_files = max(1, -(-table_bytes(spark, path) // target_file_bytes))
     df = spark.read.parquet(path)
     if sort_by:
