@@ -408,10 +408,12 @@ DOCUMENTED_EXCEPTIONS = {
         "GraphX/Pregel scale shape and the edge list is persisted"
     ),
     "dedup_cluster_cc": (
-        "iterative connected components: O(log n) label-propagation "
-        "rounds, each a Spark job — iteration machinery dominates at "
-        "bench scale; raced on a diameter-120 chain in tests; "
-        "dedup_cluster_cc_star is the 2-round large/small-star twin"
+        "connected components: one job collects the pairs, union-find "
+        "runs on the driver (at most DRIVER_CC_MAX_PAIRS pairs) and one "
+        "full-outer join maps the roots back onto the node ids; above "
+        "the cap large/small-star rounds, a Spark job each, run instead "
+        "(checked against the driver path on a diameter-120 chain in "
+        "tests); dedup_cluster_cc_star is the same builder"
     ),
     "storage_gdpr_delete": (
         "performs a real partition-pruned REWRITE (dynamic partition "
@@ -740,15 +742,15 @@ ABS_TIME_NOTES = {
         "n=13 (0.12s both)"
     ),
     "dedup_cluster_cc_star": (
-        "large-star/small-star CC: 2 fixed label-propagation rounds, "
-        "each a keyed agg job + convergence check — iteration machinery "
-        "at bench scale; O(log n) rounds independent of diameter at "
-        "100TB (raced on a diameter-120 chain in tests)"
+        "same builder as dedup_cluster_cc: at bench scale one pair "
+        "collect + driver union-find; the O(log n) large/small-star "
+        "rounds, one Spark job each, run only above DRIVER_CC_MAX_PAIRS"
     ),
     "dedup_apply_canonical": (
-        "chains cluster build (iterative CC) + canonical pick + "
-        "broadcast remap = multiple jobs by construction; the remap "
-        "itself is one broadcast hash join, sub-second"
+        "chains cluster build (pair collect + driver union-find) + "
+        "canonical pick + broadcast remap = multiple jobs by "
+        "construction; the remap itself is one broadcast hash join, "
+        "sub-second"
     ),
     "multimodal_phash_dedup": (
         "mapInPandas aHash + 8-chunk pigeonhole self-join + verify + "
@@ -1689,9 +1691,9 @@ def main() -> None:
         "samples": {n: [round(x, 4) for x in s] for n, s in samples.items() if s},
         # train-once cache audit for the ANN family (same task): misses ==
         # number of samples that paid codebook/centroid training inside
-        # their measured time.  Expected steady state: 1 miss per cache
-        # (first pass trains, later passes hit) — anything else names a
-        # keying bug or an unexpected retrain as the slow-mode cause.
+        # their measured time.  The pass loop and the noisy re-measures
+        # clear the caches first (clear_ann_caches), so every sample
+        # trains: the expected steady state is misses == samples.
         "ann_cache_stats": _ann_cache_stats(),
         "sf": sf,
         "n_queries": len(timings),
@@ -1819,14 +1821,35 @@ def main() -> None:
         # session-conf override must be impossible to mistake for a
         # convention-clean run
         line["extra_conf"] = detail["extra_conf"]
-    # hard guard: the line MUST fit the driver's 2000-char capture window
-    # (compact separators buy ~15%); trim the CHEAPEST queries first so
-    # the map always keeps the expensive head the PERF tables need
-    out = json.dumps(line, separators=(",", ":"))
-    while len(out) > 1940 and line["queries"]:
+    print(_fit_line(line))
+
+
+def _fit_line(line: dict, cap: int = 1940) -> str:
+    """Serialize the timing line within ``cap`` chars: its reader keeps
+    the first 2000, and a line cut mid-object parses as null.  Compact
+    separators buy ~15%; past that the line sheds, in order, the CHEAPEST
+    queries (the map keeps the expensive head the PERF tables need), the
+    tail of ``extra_conf``, then ``load_avg_1m_per_pass``.  Raises if it
+    still does not fit rather than print an unparseable line."""
+
+    def dump() -> str:
+        return json.dumps(line, separators=(",", ":"))
+
+    out = dump()
+    while len(out) > cap and line["queries"]:
         line["queries"].pop(next(reversed(line["queries"])))
-        out = json.dumps(line, separators=(",", ":"))
-    print(out)
+        out = dump()
+    if len(out) > cap and line.get("extra_conf"):
+        # every dropped char shortens the JSON by at least one char
+        keep = max(0, len(line["extra_conf"]) - (len(out) - cap) - 3)
+        line["extra_conf"] = line["extra_conf"][:keep] + "..."
+        out = dump()
+    if len(out) > cap:
+        line.pop("load_avg_1m_per_pass", None)
+        out = dump()
+    if len(out) > cap:
+        raise ValueError(f"timing line is {len(out)} chars, over the {cap} cap")
+    return out
 
 
 if __name__ == "__main__":

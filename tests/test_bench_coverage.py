@@ -7,13 +7,17 @@ import importlib.util
 import os
 
 
-def _headline():
+def _bench():
     spec = importlib.util.spec_from_file_location(
         "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.HEADLINE
+    return mod
+
+
+def _headline():
+    return _bench().HEADLINE
 
 
 def test_headline_covers_registry_exactly():
@@ -268,3 +272,38 @@ def test_rolling_floor_stamp_invalidation():
     rolling2, _ = mod.merge_rolling_floors(new_stored, {"match": 2.0},
                                            {"match": "aaa"}, "v1", "d1")
     assert rolling2["match"] == 0.5
+
+
+def test_fit_line_keeps_oversized_line_parseable():
+    """The driver line must come back as parseable JSON within the cap
+    even when `queries` alone cannot shrink it: a long extra_conf is
+    truncated, a long load_avg list dropped, and a line that still does
+    not fit raises instead of printing a cut-off object."""
+    import json
+
+    import pytest
+
+    fit = _bench()._fit_line
+    line = {
+        "metric": "headline_query_wall_clock_total",
+        "load_avg_1m_per_pass": [1.25] * 3,
+        "queries": {f"q{i}": 1.0 for i in range(10)},
+        "extra_conf": "spark.sql.x=" + "y" * 5000,
+    }
+    out = fit(line)
+    assert len(out) <= 1940
+    got = json.loads(out)
+    assert got["queries"] == {} and got["extra_conf"].endswith("...")
+    assert got["load_avg_1m_per_pass"] == [1.25] * 3
+
+    line = {
+        "metric": "headline_query_wall_clock_total",
+        "load_avg_1m_per_pass": [1.25] * 400,
+        "queries": {"q0": 1.0},
+        "extra_conf": "k=v",
+    }
+    got = json.loads(fit(line, cap=1940))
+    assert "load_avg_1m_per_pass" not in got and got["extra_conf"]
+
+    with pytest.raises(ValueError):
+        fit({"metric": "m" * 3000, "queries": {}})

@@ -159,27 +159,26 @@ def test_connected_components_chain_and_singleton(spark):
     from ub_etl_spark.operators.dedup import connected_components
 
     nodes = spark.createDataFrame([(i,) for i in range(6)], "doc_id bigint")
-    # chain 0-1-2, pair 3-4, singleton 5
+    # chain 0-1-2, pair 3-4, singleton 5, and a pair 6-7 whose ids are
+    # not in `nodes`: ids are nodes united with every pair endpoint
     pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (3, 4)], "id_a bigint, id_b bigint"
+        [(0, 1), (1, 2), (3, 4), (6, 7)], "id_a bigint, id_b bigint"
     )
     got = {
         r.doc_id: r.cluster_id
         for r in connected_components(nodes, pairs, "doc_id").collect()
     }
-    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5, 6: 6, 7: 6}
 
 
-def test_star_cc_matches_minlabel_on_deep_chain(spark):
-    """Large-star/small-star must produce the exact min-label components
-    on a diameter-120 chain plus random clusters — the graph shape where
-    plain propagation needs 120 rounds and the star algorithm O(log n)."""
+def test_star_rounds_match_driver_path_on_deep_chain(spark, monkeypatch):
+    """Above DRIVER_CC_MAX_PAIRS the large-star/small-star rounds run; on
+    a diameter-120 chain plus random clusters (and one self-pair whose id
+    is not in `nodes`) they must return the driver union-find's exact
+    components."""
     import random
 
-    from ub_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from ub_etl_spark.operators import dedup
 
     random.seed(7)
     nodes = spark.range(0, 200).withColumnRenamed("id", "doc_id")
@@ -187,20 +186,21 @@ def test_star_cc_matches_minlabel_on_deep_chain(spark):
     edges += [
         (random.randrange(130, 200), random.randrange(130, 200)) for _ in range(40)
     ]
-    pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
-    )
-    a = {
+    edges.append((250, 250))
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    driver = {
         (r.doc_id, r.cluster_id)
-        for r in connected_components(nodes, pairs, max_iter=200).collect()
+        for r in dedup.connected_components(nodes, pairs).collect()
     }
-    b = {
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_PAIRS", 0)
+    star = {
         (r.doc_id, r.cluster_id)
-        for r in connected_components_star(nodes, pairs).collect()
+        for r in dedup.connected_components(nodes, pairs).collect()
     }
-    assert a == b
+    assert star == driver
+    assert (250, 250) in driver
     # the chain collapses to a single cluster rooted at 0
-    assert {c for i, c in b if i <= 120} == {0}
+    assert {c for i, c in star if i <= 120} == {0}
 
 
 # ---------------------------------------------------------------------------

@@ -352,3 +352,61 @@ def test_rest_cursor_stream_restarts_long_chain(spark, tmp_path):
         assert len(n_nonempty) >= 5  # incremental, not one giant pull
     finally:
         server.shutdown()
+
+
+class TransportFaultHandler(BaseHTTPRequestHandler):
+    """Fails the next ``faults`` requests with ``mode``, then serves
+    ``payload``: "reset" hangs up before any status line (the client sees
+    RemoteDisconnected), "truncated" promises the full body length and
+    sends half of it (IncompleteRead)."""
+
+    payload = {"next": None, "results": [{"rec_id": 1, "name": "r1"}]}
+    mode = "reset"
+    faults = 0
+
+    def log_message(self, *a):  # silence
+        pass
+
+    def do_GET(self):
+        body = json.dumps(self.payload).encode()
+        cls = type(self)
+        if cls.faults > 0:
+            cls.faults -= 1
+            self.close_connection = True
+            if cls.mode == "reset":
+                return
+            body = body[: len(body) // 2]
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body) * 2))
+            self.end_headers()
+            self.wfile.write(body)
+            return
+        self.send_response(200)
+        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+
+def test_fetch_json_retries_transport_faults():
+    """A reset before the response and a truncated body are retried like
+    a 429: one fault then the fault-free payload; with no retries left
+    the transport error surfaces."""
+    import http.client
+
+    from ub_etl_spark.sources.rest import fetch_json
+
+    server = _serve(TransportFaultHandler)
+    url = f"http://127.0.0.1:{server.server_port}/api"
+    try:
+        for mode in ("reset", "truncated"):
+            TransportFaultHandler.mode = mode
+            TransportFaultHandler.faults = 1
+            got = fetch_json(url, timeout=5.0, max_retries=3, backoff_s=0.01)
+            assert got == TransportFaultHandler.payload, mode
+            TransportFaultHandler.faults = 1
+            with pytest.raises((ConnectionError, http.client.HTTPException)):
+                fetch_json(url, timeout=5.0, max_retries=0, backoff_s=0.01)
+    finally:
+        server.shutdown()
+        server.server_close()

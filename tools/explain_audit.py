@@ -393,9 +393,10 @@ EXPECT = {
     # temperature mixing: per-source weights broadcast back, one fact pass
     "mix_temperature_sampling": ["BroadcastHashJoin", "HashAggregate", "codegen id :"],
     "dedup_exact": ["HashAggregate", "codegen id :"],
-    # CC seed pass is a map-only projection (iteration drives the rest)
-    "dedup_cluster_cc": ["codegen id :"],
-    "dedup_cluster_cc_star": ["HashAggregate", "Union", "!CartesianProduct"],
+    # CC (one builder, two names): distinct node ids full-outer-joined to
+    # the driver union-find's (id, root) rows; the pair join is upstream
+    "dedup_cluster_cc": ["HashAggregate", "FullOuter", "!CartesianProduct"],
+    "dedup_cluster_cc_star": ["HashAggregate", "FullOuter", "!CartesianProduct"],
     # as-of family: union-tag + keyed window — NO join node of any kind
     "join_asof": ["Window", "Union", "!SortMergeJoin", "!BroadcastNestedLoopJoin"],
     "join_asof_forward": ["Window", "Union", "!SortMergeJoin", "!BroadcastNestedLoopJoin"],

@@ -2,8 +2,9 @@
 dependency): degree-oriented triangle counting and level-synchronous BFS.
 
 Family context: the repo's graph tier already holds PageRank
-(queries/mlprep.graph_pagerank_trade), connected components two ways
-(operators/dedup: min-label propagation + large-star/small-star), and
+(queries/mlprep.graph_pagerank_trade), connected components
+(operators/dedup.connected_components: driver union-find up to a pair
+cap, large-star/small-star rounds above it), and
 recursive hierarchy flattening (queries/advanced.hierarchy_flatten_paths).
 These two complete the classic quartet (ranking / components / triangles
 / distances).

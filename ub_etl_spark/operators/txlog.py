@@ -59,6 +59,7 @@ class VersionedTable:
         added: list[str],
         removed: list[str],
         expected_version: int | None = None,
+        stats: dict | None = None,
     ) -> int:
         """Atomically publish a commit; returns the new version.
 
@@ -68,12 +69,16 @@ class VersionedTable:
         staged by the loser are simply never referenced: garbage, not
         corruption).  Default: current head (blind append — still
         atomic, still conflict-checked against concurrent committers).
+        ``stats``: per-added-file column stats, recorded in the entry.
         """
         base = self.latest_version() if expected_version is None else expected_version
         version = base + 1
+        entry = {"version": version, "added": added, "removed": removed}
+        if stats is not None:
+            entry["stats"] = stats
         staged = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(staged, "w") as fh:
-            json.dump({"version": version, "added": added, "removed": removed}, fh)
+            json.dump(entry, fh)
         try:
             os.link(staged, self._entry_path(version))  # atomic put-if-absent
         except FileExistsError:
@@ -84,20 +89,28 @@ class VersionedTable:
             os.remove(staged)
         return version
 
-    def snapshot_files(self, version: int | None = None) -> list[str]:
-        """Live data files at a version (default: head), by log replay."""
+    def _entries(self, version: int | None):
+        """Log entries 1..version (default: head), in commit order."""
         head = self.latest_version() if version is None else version
-        live: list[str] = []
         for v in range(1, head + 1):
             p = self._entry_path(v)
             if not os.path.exists(p):
                 raise ValueError(f"missing log entry for version {v}")
             with open(p) as fh:
-                entry = json.load(fh)
+                yield json.load(fh)
+
+    def snapshot_files(self, version: int | None = None) -> list[str]:
+        """Live data files at a version (default: head), by log replay."""
+        live: list[str] = []
+        for entry in self._entries(version):
             for r in entry["removed"]:
                 live.remove(r)
             live.extend(entry["added"])
         return live
+
+    def _stats(self, added: list[str]) -> dict | None:
+        """Per-file stats a commit records for its added files."""
+        return None
 
     # -- dataframe surface --------------------------------------------------
 
@@ -124,7 +137,9 @@ class VersionedTable:
         )
         removed = self.snapshot_files(base) if mode == "overwrite" else []
         try:
-            return self.commit(added, removed, expected_version=base)
+            return self.commit(
+                added, removed, expected_version=base, stats=self._stats(added)
+            )
         except VersionConflict:
             shutil.rmtree(part_dir, ignore_errors=True)  # staged garbage
             raise
@@ -184,43 +199,12 @@ class StatsTable(VersionedTable):
         super().__init__(path)
         self.stats_cols = stats_cols
 
-    def write_commit(self, df, mode="append", expected_version=None) -> int:
-        assert mode in ("append", "overwrite")
-        base = self.latest_version() if expected_version is None else expected_version
-        part_dir = os.path.join(self.path, f"part-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(part_dir)
-        added = sorted(
-            os.path.join(part_dir, f)
-            for f in os.listdir(part_dir)
-            if f.endswith(".parquet")
-        )
-        removed = self.snapshot_files(base) if mode == "overwrite" else []
-        staged = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
-        entry = {
-            "version": base + 1,
-            "added": added,
-            "removed": removed,
-            "stats": {f: _file_stats(f, self.stats_cols) for f in added},
-        }
-        with open(staged, "w") as fh:
-            json.dump(entry, fh, default=str)
-        try:
-            os.link(staged, self._entry_path(base + 1))
-        except FileExistsError:
-            shutil.rmtree(part_dir, ignore_errors=True)
-            raise VersionConflict(
-                f"version {base + 1} already committed by another writer"
-            ) from None
-        finally:
-            os.remove(staged)
-        return base + 1
+    def _stats(self, added: list[str]) -> dict:
+        return {f: _file_stats(f, self.stats_cols) for f in added}
 
     def stats(self, version: int | None = None) -> dict:
-        head = self.latest_version() if version is None else version
         out: dict = {}
-        for v in range(1, head + 1):
-            with open(self._entry_path(v)) as fh:
-                entry = json.load(fh)
+        for entry in self._entries(version):
             out.update(entry.get("stats", {}))
         return out
 

@@ -155,21 +155,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cluster assignment over near-dup pairs: connected components with the
 # min member id as canonical — the step a dedup pipeline runs after pair
 # generation.  Oracle: recursive CTE transitive closure over the same
-# exact-Jaccard pairs (fully value-checked, including singletons).
-def _cc_inputs(spark: SparkSession, sf_dir: str):
-    """Shared (docs, pairs) for both CC twins — they MUST stay identical
-    for the common recursive-CTE oracle and the equal-components
-    guarantee to hold.  Node set matches dedup_fuzzy's short-doc guard so
-    cluster rows align with the oracle's `len(t) >= 3` restriction."""
-    docs = T(spark, sf_dir, "documents").filter(
-        (F.col("doc_id") < 400) & (F.size(F.split("text", " ")) >= 3)
-    )
-    pairs = D.exact_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.25).select(
-        "id_a", "id_b"
-    )
-    return docs, pairs
-
-
+# exact-Jaccard pairs (fully value-checked, including singletons).  The
+# node set matches dedup_fuzzy's short-doc guard so cluster rows align
+# with the oracle's `len(t) >= 3` restriction.
 @register(
     "dedup_cluster_cc",
     tier="B",
@@ -208,27 +196,26 @@ def _cc_inputs(spark: SparkSession, sf_dir: str):
     """,
 )
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs, pairs = _cc_inputs(spark, sf_dir)
+    docs = T(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") < 400) & (F.size(F.split("text", " ")) >= 3)
+    )
+    pairs = D.exact_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.25).select(
+        "id_a", "id_b"
+    )
     cc = D.connected_components(docs, pairs, "doc_id")
     return cc.withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
 
 
-# B71: the same cluster assignment via alternating large-star/small-star
-# (Kiveris et al.) — O(log n) rounds regardless of graph diameter, the
-# scale path for deep near-dup chains and entity-resolution graphs
-# where min-label propagation's round count tracks the diameter.  Same
-# recursive-CTE oracle as dedup_cluster_cc: both algorithms must land on
-# identical components, and tests additionally race them on a
-# diameter-120 chain.
-@register(
+# B71: the same builder under the name the registry's query list and the
+# bench HEADLINE list carry.  connected_components itself picks the
+# driver union-find or the executor star rounds by pair count
+# (DRIVER_CC_MAX_PAIRS); tests check the star rounds against the driver
+# path on a diameter-120 chain.
+register(
     "dedup_cluster_cc_star",
     tier="B",
     oracle=REGISTRY["dedup_cluster_cc"].oracle,
-)
-def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs, pairs = _cc_inputs(spark, sf_dir)
-    cc = D.connected_components_star(docs, pairs, "doc_id")
-    return cc.withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
+)(dedup_cluster_cc)
 
 
 # Exact-substring span dedup (Lee et al. 2022): cross-document repeated

@@ -47,6 +47,7 @@ http.server stub — no external network involved.
 
 from __future__ import annotations
 
+import http.client
 import json
 import time
 import urllib.error
@@ -79,7 +80,11 @@ def fetch_json(url: str, timeout: float, max_retries: int, backoff_s: float):
 
     Mirrors the reference's retry classes (JSON decode error and HTTP
     429/503/524 retry; everything else aborts) but with sane backoff
-    instead of fixed 30-60 min sleeps.
+    instead of fixed 30-60 min sleeps.  Transport faults are retried too:
+    a connection reset before the response (``RemoteDisconnected``, which
+    urllib does not wrap in ``URLError``) and a truncated body
+    (``IncompleteRead``); under ``local[N]`` one such fault would
+    otherwise fail the whole read.
     """
     attempt = 0
     while True:
@@ -89,7 +94,13 @@ def fetch_json(url: str, timeout: float, max_retries: int, backoff_s: float):
         except urllib.error.HTTPError as e:
             if e.code not in RETRYABLE_STATUSES or attempt >= max_retries:
                 raise
-        except (json.JSONDecodeError, urllib.error.URLError, TimeoutError):
+        except (
+            json.JSONDecodeError,
+            urllib.error.URLError,
+            TimeoutError,
+            ConnectionError,
+            http.client.HTTPException,
+        ):
             if attempt >= max_retries:
                 raise
         time.sleep(min(backoff_s * (2**attempt), 30.0))
